@@ -202,6 +202,57 @@ def check_queries(root, run_dir, data, names, oracles):
     return verdict
 
 
+def sq_dist(a, b, dims):
+    """DuckDB expression: exact integer squared distance of two lists."""
+    return (f"CAST(list_sum(list_transform(generate_series(1, {dims}), "
+            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) AS BIGINT)")
+
+
+def except_both(a, b):
+    """Rows of `a` not in `b` plus rows of `b` not in `a`, as bags."""
+    return (f"SELECT count(*) FROM ((SELECT * FROM {a} EXCEPT ALL SELECT * FROM {b}) "
+            f"UNION ALL (SELECT * FROM {b} EXCEPT ALL SELECT * FROM {a}))")
+
+
+# IVF-PQ codes of the fed vectors, recomputed the way the e* oracles do
+# (scale-1024 integer quantization, exact integer distances, ties to the
+# lower id): the 8 cells are the seeded vectors with id < 8, the codebook
+# the residuals of ids 8..23, each cut into 8 subvectors of 8 dims
+IVF_CODES_SQL = f"""
+WITH emb AS (
+  SELECT 'model' AS src, vec_id AS id, embedding
+  FROM read_parquet('{{data}}/embeddings.parquet') WHERE vec_id < 24
+  UNION ALL
+  SELECT 'fed', vec_id, embedding FROM read_parquet('{{src}}/ivfCodes/*.parquet')),
+q AS MATERIALIZED (
+  SELECT src, id, list_transform(embedding,
+           x -> CAST(round_even(CAST(x AS DOUBLE) * 1024, 0) AS BIGINT)) AS q
+  FROM emb),
+cents AS MATERIALIZED (
+  SELECT CAST(id AS INT) AS cell, q AS cellq FROM q WHERE src = 'model' AND id < 8),
+asg AS MATERIALIZED (
+  SELECT src, id, cell, list_transform(generate_series(1, 64), i -> q[i] - cellq[i]) AS r
+  FROM (SELECT v.src, v.id, v.q, c.cell, c.cellq,
+               row_number() OVER (PARTITION BY v.src, v.id
+                                  ORDER BY {sq_dist('v.q', 'c.cellq', 64)}, c.cell) AS rk
+        FROM q v, cents c)
+  WHERE rk = 1),
+rsub AS MATERIALIZED (
+  SELECT src, id, cell, CAST(s AS INT) AS sub, r[(s*8+1):(s*8+8)] AS subq
+  FROM asg, UNNEST(generate_series(0, 7)) AS u(s)),
+cb AS MATERIALIZED (
+  SELECT sub, CAST(id - 8 AS INT) AS code, subq AS cq
+  FROM rsub WHERE src = 'model' AND id >= 8),
+want AS (
+  SELECT id, cell, sub, code FROM (
+    SELECT s.id, s.cell, s.sub, c.code,
+           row_number() OVER (PARTITION BY s.id, s.sub
+                              ORDER BY {sq_dist('s.subq', 'c.cq', 8)}, c.code) AS rk
+    FROM rsub s JOIN cb c ON c.sub = s.sub WHERE s.src = 'fed')
+  WHERE rk = 1),
+got AS (SELECT id, cell, sub, code FROM read_parquet('{{sinks}}/codes/*.parquet'))
+{except_both('want', 'got')}"""
+
 STREAM_CHECKS = {
     # the fingerprint registry holds one row per distinct md5(text), owned
     # by the lowest doc id carrying that text
@@ -225,46 +276,36 @@ STREAM_CHECKS = {
                 g AS (SELECT source, sum(n_docs) AS n_docs, sum(n_kept) AS n_kept,
                              sum(chars_total) AS chars_total, sum(chars_removed) AS chars_removed
                       FROM read_parquet('{sinks}/impact/*.parquet') GROUP BY source)
-           SELECT count(*) FROM ((SELECT * FROM e EXCEPT ALL SELECT * FROM g)
-                                 UNION ALL (SELECT * FROM g EXCEPT ALL SELECT * FROM e))""")],
-    # every staged document is packed once, and each source's running
-    # total equals the tokens its packed items hold
+           """ + except_both("e", "g"))],
+    # drop k's ids all exceed drop k-1's, so the stream packs the fed
+    # documents exactly as m15, its batch twin, packs their union: m15's
+    # oracle, run over the fed drops, gives every item row, and each
+    # source's stored total is the length of its item stream
     "packing": [(
-        "one text item per staged document",
-        """SELECT count(*) FROM (
-             (SELECT doc_id FROM read_parquet('{sinks}/items/*.parquet') WHERE modality = 'text'
-              EXCEPT ALL SELECT doc_id FROM read_parquet('{src}/packing/*.parquet'))
-             UNION ALL
-             (SELECT doc_id FROM read_parquet('{src}/packing/*.parquet')
-              EXCEPT ALL SELECT doc_id FROM read_parquet('{sinks}/items/*.parquet')
-                         WHERE modality = 'text'))"""), (
-        "per-source totals equal the packed tokens and end the item stream",
-        """WITH t AS (SELECT source, sum(delta) AS total FROM read_parquet('{sinks}/totals/*.parquet')
-                      GROUP BY source),
-                i AS (SELECT source, sum(n_tok) AS toks,
-                             max(offset_in_stream + n_tok) AS stream_end
-                      FROM read_parquet('{sinks}/items/*.parquet') GROUP BY source)
-           SELECT count(*) FROM t FULL JOIN i USING (source)
-           WHERE t.total IS DISTINCT FROM i.toks OR t.total IS DISTINCT FROM i.stream_end""")],
-    # every staged vector is encoded once: one cell in [0, 8) and one code
-    # per sub-quantizer
-    "ivfCodes": [(
-        "8 sub-codes in one cell per staged vector",
-        """WITH c AS (SELECT id, count(*) AS n, count(DISTINCT sub) AS subs,
-                             min(cell) AS lo, max(cell) AS hi
-                      FROM read_parquet('{sinks}/codes/*.parquet') GROUP BY id)
-           SELECT count(*) FROM c FULL JOIN read_parquet('{src}/ivfCodes/*.parquet') s
-                                   ON c.id = s.vec_id
-           WHERE c.id IS NULL OR s.vec_id IS NULL OR n <> 8 OR subs <> 8
-              OR lo <> hi OR lo NOT BETWEEN 0 AND 7""")],
+        "packed items = m15's oracle over the fed drops",
+        """WITH want AS (SELECT doc_id, source, item_idx, modality, n_tok, offset_in_stream,
+                                chunk_id FROM ({m15})),
+                got AS (SELECT doc_id, source, item_idx, modality, n_tok, offset_in_stream,
+                               chunk_id FROM read_parquet('{sinks}/items/*.parquet'))
+           """ + except_both("want", "got")), (
+        "per-source totals = length of m15's item stream",
+        """WITH want AS (SELECT source, sum(n_tok) AS total FROM ({m15}) GROUP BY source),
+                got AS (SELECT source, sum(delta) AS total
+                        FROM read_parquet('{sinks}/totals/*.parquet') GROUP BY source)
+           """ + except_both("want", "got"))],
+    "ivfCodes": [("cell and 8 sub-codes per fed vector = DuckDB's encoding", IVF_CODES_SQL)],
 }
 
 
-def check_streams(run_dir):
+def check_streams(run_dir, m15_sql):
     """Each flow's exported sinks against a DuckDB recomputation over the
     drops it was fed. Returns {flow: "" or failure reason}."""
     con = duckdb_connect(run_dir)
-    paths = {"sinks": os.path.join(run_dir, "sinks"), "src": os.path.join(run_dir, "src")}
+    paths = {"sinks": os.path.join(run_dir, "sinks"), "src": os.path.join(run_dir, "src"),
+             "data": os.path.join(run_dir, "data"), "m15": m15_sql}
+    # m15's oracle reads `documents`: here, the drops the packing flow was fed
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{paths['src']}/packing/*.parquet')")
     verdict = {}
     for flow, checks in STREAM_CHECKS.items():
         bad = []
@@ -424,10 +465,10 @@ def stream_metrics(recs, spans, verdict, trace):
     cores = next(r["cores"] for r in recs if r["kind"] == "session")
     trigger = sum(r["trigger_ms"] for r in traced) / npass
     m, per_pass = exec_layers(traced, npass, trigger, cores)
-    # Catalyst phases are summed over the whole window
+    # Catalyst phases are summed over the traced third of the window
     plans = next(r for r in recs if r["kind"] == "plans")
     for k in ("analysis_ms", "optimization_ms", "planning_ms"):
-        m[f"plans.{k}"] = plans[k] / max(1e-9, len(bs) / len(STREAM_FLOWS))
+        m[f"plans.{k}"] = plans[k] / npass
     for k in ("add_batch_ms", "query_planning_ms", "wal_commit_ms", "latest_offset_ms"):
         m[f"streaming.{k}"] = per_pass(k)
     m["store.files_written"] = per_pass("files_written")
@@ -440,15 +481,24 @@ def stream_metrics(recs, spans, verdict, trace):
     m.update(selfs)
     # micro-batch time outside the phases Spark reports
     m["trace.unspanned_frac"] = selfs["self.batch_ms"] / max(1e-9, trigger)
-    m["trace.overhead_frac"] = (median([r["trigger_ms"] for r in traced]) /
-                                max(1e-9, median([r["trigger_ms"] for r in plain])) - 1)
+    # a whole step (sink listings, listener, span records and the batch
+    # itself) of the traced third against the untraced thirds around it,
+    # flow by flow, since the flows differ in cost
+    ratios = []
+    for flow in STREAM_FLOWS:
+        t = [r["step_ms"] for r in traced if r["flow"] == flow]
+        u = [r["step_ms"] for r in plain if r["flow"] == flow]
+        if t and u:
+            ratios.append(median(t) / median(u))
+    m["trace.overhead_frac"] = statistics.mean(ratios) - 1 if ratios else 0.0
     return m, len(bs), failed
 
 
 # ------------------------------------------------------------------ main
 
 def run(root, workload, seed, seconds, trace, scale=SCALE, tamper=None):
-    """One benchmark run; returns the result object. `tamper(run_dir)` runs
+    """One benchmark run; returns the result object and the check verdict
+    of each query or flow ("" when it passed). `tamper(run_dir)` runs
     between the JVM and the checks (the self-test corrupts outputs there)."""
     require_checkout(root)
     build_dir = os.path.join(root, ".bench_build")
@@ -468,7 +518,9 @@ def run(root, workload, seed, seconds, trace, scale=SCALE, tamper=None):
         if tamper:
             tamper(run_dir)
         if workload == "stream_ingest":
-            verdict = check_streams(run_dir)
+            m15 = next(r["sql"] for r in recs
+                       if r["kind"] == "oracle" and r["name"] == "m15_interleaved_packing")
+            verdict = check_streams(run_dir, m15)
             metrics, attempted, failed = stream_metrics(recs, read_spans(run_dir), verdict, trace)
         else:
             names = [r["name"] for r in recs if r["kind"] == "warmup"]
@@ -500,7 +552,7 @@ def run(root, workload, seed, seconds, trace, scale=SCALE, tamper=None):
         return {"correct": failed == 0 and not any(verdict.values()),
                 "attempted": attempted, "failed": failed,
                 "metrics": {k: {"value": float(metrics.get(k, 0.0)), "unit": u}
-                            for k, u in units.items()}}
+                            for k, u in units.items()}}, verdict
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
@@ -515,7 +567,7 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = ap.parse_args()
     try:
-        result = run(os.getcwd(), a.workload, a.seed, a.seconds, a.trace)
+        result, _ = run(os.getcwd(), a.workload, a.seed, a.seconds, a.trace)
     except (BenchError, subprocess.CalledProcessError) as e:
         print(f"perfbench: {e}", file=sys.stderr)
         return 2

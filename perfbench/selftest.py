@@ -3,10 +3,13 @@
 
 1. every workload prints every end-to-end metric (untraced) and every
    per-layer metric (traced), each with its unit;
-2. a deliberately corrupted query result or stream sink makes the run
-   count failures and report correct=false;
+2. a deliberately corrupted query result, or one wrong value in each
+   stream flow's sink, makes the run count failures and report
+   correct=false, and each corrupted flow fails its own check;
 3. in the traced run, the query wall time is covered by the build span, the
-   Catalyst phases and the Spark jobs, up to UNSPANNED_TOLERANCE of it.
+   Catalyst phases and the Spark jobs, up to UNSPANNED_TOLERANCE of it;
+4. the traced query_mix run sees build-time jobs of the Tables and
+   similarity layers (e11 reads tables and fits k-means while it is built).
 
     python3 perfbench/selftest.py        (from the root of a graft checkout)
 """
@@ -38,12 +41,31 @@ def drop_first_row(run_dir, pattern):
     raise AssertionError(f"no rows to corrupt under {pattern}")
 
 
+def bump_first_value(run_dir, pattern, column):
+    """Add 1 to `column` in the first row of the first non-empty parquet
+    file under run_dir matching pattern: one wrong value, same shape."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    for f in sorted(glob.glob(os.path.join(run_dir, pattern))):
+        t = pq.read_table(f)
+        if t.num_rows > 0:
+            i = t.schema.get_field_index(column)
+            vals = t.column(i).to_pylist()
+            vals[0] += 1
+            pq.write_table(t.set_column(i, t.schema.field(i),
+                                        pa.array(vals, t.schema.field(i).type)), f)
+            return
+    raise AssertionError(f"no rows to corrupt under {pattern}")
+
+
 def corrupt_query_result(run_dir):
     drop_first_row(run_dir, "results/*/*.parquet")
 
 
-def corrupt_stream_sink(run_dir):
-    drop_first_row(run_dir, "sinks/fp/*.parquet")
+def corrupt_stream_sinks(run_dir):
+    bump_first_value(run_dir, "sinks/fp/*.parquet", "canonical_id")
+    bump_first_value(run_dir, "sinks/items/*.parquet", "n_tok")
+    bump_first_value(run_dir, "sinks/codes/*.parquet", "code")
 
 
 def main():
@@ -59,7 +81,7 @@ def main():
 
     for workload in bench.WORKLOADS:
         for trace, names in ((0, bench.END_TO_END), (1, bench.PER_LAYER)):
-            r = bench.run(root, workload, SEED, SECONDS, trace, scale=SCALE)
+            r, _ = bench.run(root, workload, SEED, SECONDS, trace, scale=SCALE)
             got = {k: v["unit"] for k, v in r["metrics"].items()}
             expect(got == names, f"{workload} trace={trace}: every metric with its unit")
             expect(r["correct"] and r["failed"] == 0 and r["attempted"] >= 1,
@@ -70,11 +92,19 @@ def main():
                 expect(0 <= frac <= UNSPANNED_TOLERANCE,
                        f"{workload}: traced spans cover the wall time "
                        f"(unspanned {frac:.3f} <= {UNSPANNED_TOLERANCE})")
-        tamper = corrupt_stream_sink if workload == "stream_ingest" else corrupt_query_result
-        r = bench.run(root, workload, SEED, SECONDS, 0, scale=SCALE, tamper=tamper)
+                if workload == "query_mix":
+                    for k in ("Tables.read_jobs", "similarity.build_jobs"):
+                        v = r["metrics"][k]["value"]
+                        expect(v > 0, f"{workload}: {k} > 0 ({v:g})")
+        tamper = corrupt_stream_sinks if workload == "stream_ingest" else corrupt_query_result
+        r, verdict = bench.run(root, workload, SEED, SECONDS, 0, scale=SCALE, tamper=tamper)
         expect(not r["correct"] and r["failed"] > 0 and r["metrics"]["ok_frac"]["value"] < 1,
                f"{workload}: a corrupted output is caught "
                f"({r['failed']} of {r['attempted']} failed)")
+        if workload == "stream_ingest":
+            for flow in bench.STREAM_FLOWS:
+                expect(bool(verdict[flow]), f"{workload}: a wrong value in {flow}'s sink "
+                       f"fails its check ({verdict[flow][:80]})")
     print(f"{len(problems)} problem(s)")
     return 1 if problems else 0
 

@@ -37,6 +37,9 @@ final class StreamRun(spark: SparkSession, dir: String, outDir: String, rec: Rec
   }
 
   def run(seconds: Double, traced: Boolean): Unit = {
+    // the packing sink is checked against the oracle of its batch twin
+    rec.emit("oracle", "name" -> "m15_interleaved_packing",
+      "sql" -> graft.SparkEntry.oracleSql("m15_interleaved_packing"))
     var cents: DataFrame = null
     var codebook: DataFrame = null
     timed(rec, "stream_models") {
@@ -90,11 +93,11 @@ final class StreamRun(spark: SparkSession, dir: String, outDir: String, rec: Rec
     val tracer = new Tracer
     val sc = spark.sparkContext
 
-    /** Publish the flow's next drop and wait for its micro-batch. */
-    def step(f: Flow, timedDrop: Boolean): Unit = {
-      // in a traced run every other drop lists the sinks around its batch,
-      // so the listing's cost shows against the unlisted drops
-      val listed = traced && timedDrop && f.published % 2 == 1
+    /** Publish the flow's next drop and wait for its micro-batch; a
+      * listed drop also lists the sinks around its batch and records its
+      * spans. */
+    def step(f: Flow, timedDrop: Boolean, listed: Boolean): Unit = {
+      val s0 = System.nanoTime()
       val before = if (listed) f.sinks.flatMap(listing).toMap else Map.empty[String, Long]
       val segsBefore = if (listed) segments(f) else 0
       val k = f.published
@@ -154,36 +157,48 @@ final class StreamRun(spark: SparkSession, dir: String, outDir: String, rec: Rec
           spans.add(trace, -1, "store:list", spans.us(l0), spans.us(l1))
         }
       }
-      rec.emit("batch", fields: _*)
+      // the whole step, tracing work included: what tracing adds shows
+      // as the difference between listed and unlisted drops
+      rec.emit("batch", fields :+ ("step_ms" -> (System.nanoTime() - s0) / 1e6): _*)
     }
 
-    /** Every flow publishes drops on its own thread while `more` holds and
-      * pre-generated drops remain. */
-    def inParallel(more: Flow => Boolean, timedDrop: Boolean): Unit = {
+    /** Every flow publishes drops on its own thread, at least one, then
+      * while `more` holds and pre-generated drops remain. */
+    def inParallel(more: Flow => Boolean, timedDrop: Boolean, listed: Boolean): Unit = {
       val threads = flows.map { f =>
-        val t = new Thread(() => while (more(f) && Files.exists(f.nextDrop)) step(f, timedDrop))
+        val first = f.published
+        val t = new Thread(() =>
+          while ((f.published == first || more(f)) && Files.exists(f.nextDrop))
+            step(f, timedDrop, listed))
         t.start(); t
       }
       threads.foreach(_.join())
     }
 
-    timed(rec, "warmup")(inParallel(_.published < WarmupDrops, timedDrop = false))
+    timed(rec, "warmup")(inParallel(_.published < WarmupDrops, timedDrop = false, listed = false))
     stamp(rec, "before")
-    if (traced) { sc.addSparkListener(tracer); spark.listenerManager.register(tracer) }
     val t0 = System.nanoTime()
-    // a traced run needs an unlisted and a listed drop per flow at least
-    val minDrops = WarmupDrops + (if (traced) 2 else 1)
-    inParallel(f => f.published < minDrops || (System.nanoTime() - t0) / 1e9 < seconds,
-      timedDrop = true)
-    rec.emit("window", "ms" -> (System.nanoTime() - t0) / 1e6)
-    if (traced) {
-      org.apache.spark.perfbench.BusDrain(sc)
-      val plans = tracer.phaseTotals(tracer.drainExecutions())
-      rec.emit("plans", "analysis_ms" -> plans.getOrElse("analysis", 0.0),
-        "optimization_ms" -> plans.getOrElse("optimization", 0.0),
-        "planning_ms" -> plans.getOrElse("planning", 0.0))
-      sc.removeSparkListener(tracer); spark.listenerManager.unregister(tracer)
+    def elapsed = (System.nanoTime() - t0) / 1e9
+    if (!traced) inParallel(_ => elapsed < seconds, timedDrop = true, listed = false)
+    else {
+      // untraced, traced and untraced thirds of the window: the untraced
+      // drops bracket the traced ones, so warm-up drift cancels when
+      // run.py compares them. The listener is registered for the traced
+      // third only, and every drop in it is listed.
+      for ((on, i) <- Seq(false, true, false).zipWithIndex) {
+        if (on) { sc.addSparkListener(tracer); spark.listenerManager.register(tracer) }
+        inParallel(_ => elapsed < seconds * (i + 1) / 3, timedDrop = true, listed = on)
+        if (on) {
+          org.apache.spark.perfbench.BusDrain(sc)
+          val plans = tracer.phaseTotals(tracer.drainExecutions())
+          rec.emit("plans", "analysis_ms" -> plans.getOrElse("analysis", 0.0),
+            "optimization_ms" -> plans.getOrElse("optimization", 0.0),
+            "planning_ms" -> plans.getOrElse("planning", 0.0))
+          sc.removeSparkListener(tracer); spark.listenerManager.unregister(tracer)
+        }
+      }
     }
+    rec.emit("window", "ms" -> (System.nanoTime() - t0) / 1e6)
     stamp(rec, "after")
     flows.foreach(_.query.stop())
     flows.foreach(_.export())

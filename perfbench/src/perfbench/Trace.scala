@@ -6,7 +6,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One traced interval: `trace` groups the spans of one query or batch,
@@ -31,6 +32,10 @@ final class JobCounts {
   * the counts only after [[org.apache.spark.perfbench.BusDrain]]. */
 final class Tracer extends SparkListener with QueryExecutionListener {
   val Tag = "perfbench.tag"
+  private val ExecutionId = SQLExecution.EXECUTION_ID_KEY
+  /** Call site (short form, then the long form's frames) of each running
+    * SQL execution, taken on the thread that started it. */
+  private val execSite = new ConcurrentHashMap[Long, String]()
   private val jobTag = new ConcurrentHashMap[Int, String]()
   private val stageTag = new ConcurrentHashMap[Int, String]()
   private val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
@@ -62,9 +67,14 @@ final class Tracer extends SparkListener with QueryExecutionListener {
       jobTag.put(e.jobId, t)
       e.stageIds.foreach(stageTag.put(_, t))
       // the long call site names the first frame outside Spark: the
-      // program's file and package, which the layer filters match on
-      val site = e.stageInfos.sortBy(-_.stageId).headOption
-        .map(last => last.name + "\n" + last.details).getOrElse("")
+      // program's file and package, which the layer filters match on.
+      // Adaptive execution submits a DataFrame action's jobs from a
+      // thread pool, where no program frame is on the stack, so a job of
+      // a SQL execution takes the call site of the execution instead.
+      val site = Option(e.properties).flatMap(p => Option(p.getProperty(ExecutionId)))
+        .flatMap(id => Option(execSite.get(id.toLong)))
+        .getOrElse(e.stageInfos.sortBy(-_.stageId).headOption
+          .map(last => last.name + "\n" + last.details).getOrElse(""))
       jobStart.put(e.jobId, (e.time, site))
       counts(t).synchronized { counts(t).jobs += 1 }
     }
@@ -100,6 +110,13 @@ final class Tracer extends SparkListener with QueryExecutionListener {
       }
     }
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart =>
+      execSite.put(x.executionId, x.description + "\n" + x.details)
+    case x: SparkListenerSQLExecutionEnd => execSite.remove(x.executionId)
+    case _ =>
+  }
+
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
     executions.add(funcName -> phases(qe))
 
@@ -131,9 +148,10 @@ final class SpanLog {
 
   def write(f: java.io.File): Unit = {
     val w = new java.io.PrintWriter(f)
+    val rec = new Records(w)
     spans.foreach { s =>
-      w.println(s"""{"id":${s.id},"trace":${s.trace},"parent":${s.parent},""" +
-        s""""name":"${s.name}","start_us":${s.startUs},"end_us":${s.endUs}}""")
+      rec.emit("span", "id" -> s.id, "trace" -> s.trace, "parent" -> s.parent,
+        "name" -> s.name, "start_us" -> s.startUs, "end_us" -> s.endUs)
     }
     w.close()
   }
